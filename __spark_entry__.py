@@ -7,7 +7,7 @@ value-hash -> CORRECTNESS_r{N}.json).
 
 The catalog lives in ``kit_spark.queries`` (exactly 50 entries — the
 driver's gate checks at most 50 — 44 with DuckDB oracles: relational
-coverage, crawl-engine slices incl. both robots-gate formulations,
+coverage, crawl-engine slices incl. the robots gate (under two names),
 training-data dedup/text/similarity/ANN, sequence packing (the
 distributed cumsum vs the naive single-partition SUM() OVER form)
 and both composed cleaning

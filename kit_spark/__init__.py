@@ -9,7 +9,7 @@ scaled out to a 10^10-URL frontier over image+caption tables:
 * ``operators``   — frontier dataflow (dedup, politeness, robots gate, ...)
 * ``sources``     — table layer (parquet snapshots; Iceberg-ready), synthesis
 * ``plans``       — plan inspection/assertion helpers
-* ``streaming``   — Structured Streaming crawl-loop variant
+* ``streaming``   — Structured Streaming incremental curation
 * ``crawl``       — the batch crawl-round driver (checkpoint/resume)
 """
 

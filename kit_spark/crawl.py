@@ -10,7 +10,8 @@ URL-seen set equality):
    left_anti vs url_seen (D2) with optional sharded-Bloom prefilter
 2. resolve robots for new hosts (S1-S4 compile UDF), expand their sitemaps
    depth<=1 (S5-S9/D6) into next-round candidates
-3. gate new frontier entries (D5: host-key join + first-match UDF);
+3. gate new frontier entries (D5: host-key join + the zero-Python
+   first-match gate over canonical match paths);
    robots never change mid-crawl, so gating once at admission is
    equivalent to the oracle's per-round re-gate
 4. politeness + priority schedule (D3/D4 two-phase salted top-k) and the
@@ -37,7 +38,6 @@ from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 from kit_spark import lifecycle
 from kit_spark.functions.bloom import build_bloom, merge_bloom
 from kit_spark.functions.robots_udfs import (ROBOTS_CACHE_SCHEMA,
-                                             gate_allowed,
                                              gate_allowed_relational,
                                              make_compile_udf)
 from kit_spark.kit_py.crawler import PRIORITY_LINK, PRIORITY_SEED
@@ -74,8 +74,6 @@ class SparkCrawlConfig:
     default_delay: float = 10.0
     max_rounds: int = 50
     optimal: bool = True
-    relational_gate: bool = True  # zero-Python Catalyst gate (paths are
-    # canonical in the driver, its contract); False = Arrow-UDF gate
     salt_buckets: int = 8
     skew_threshold: int = 500_000  # pending-per-host above which to salt
     seen_buckets: int = 16
@@ -182,8 +180,9 @@ class CrawlDriver:
         bloom = (self._read_state("url_seen_bloom", None)
                  if cfg.use_bloom and "url_seen_bloom" in self._snapshots
                  else None)
-        admitted = admit_candidates(candidates, url_seen, bloom_table=bloom,
-                                    bloom_shards=cfg.seen_buckets).cache()
+        admitted = lifecycle.track(admit_candidates(
+            candidates, url_seen, bloom_table=bloom,
+            bloom_shards=cfg.seen_buckets))
 
         # 2. robots for new hosts (S1-S4) + sitemap expansion (D6)
         new_hosts = (admitted.select("host_key").distinct()
@@ -191,19 +190,18 @@ class CrawlDriver:
                            "left_anti"))
         docs = (F.broadcast(self.robots_docs) if cfg.broadcast_fixture_tables
                 else self.robots_docs)
-        robots_new = (new_hosts.join(docs, "host_key", "left")
-                      .withColumn("access_state",
-                                  F.coalesce("access_state",
-                                             F.lit("unavailable")))
-                      .withColumn("__r", self._compile_udf(
-                          F.col("access_state"), F.col("body")))
-                      .select("host_key", "access_state",
-                              F.col("__r.user_agent").alias("user_agent"),
-                              F.col("__r.always").alias("always"),
-                              F.col("__r.rules").alias("rules"),
-                              F.col("__r.crawl_delay").alias("crawl_delay"),
-                              F.col("__r.sitemaps").alias("sitemaps"))
-                      ).cache()
+        robots_new = lifecycle.track(
+            new_hosts.join(docs, "host_key", "left")
+            .withColumn("access_state",
+                        F.coalesce("access_state", F.lit("unavailable")))
+            .withColumn("__r", self._compile_udf(
+                F.col("access_state"), F.col("body")))
+            .select("host_key", "access_state",
+                    F.col("__r.user_agent").alias("user_agent"),
+                    F.col("__r.always").alias("always"),
+                    F.col("__r.rules").alias("rules"),
+                    F.col("__r.crawl_delay").alias("crawl_delay"),
+                    F.col("__r.sitemaps").alias("sitemaps")))
         robots_cache = robots_cache.unionByName(robots_new)
 
         sitemap_cand = expand_sitemaps_df(
@@ -213,15 +211,13 @@ class CrawlDriver:
         ).select("url", "priority")
 
         # 3. gate the newly admitted entries (D5)
-        gate = (gate_allowed_relational if cfg.relational_gate
-                else gate_allowed)
-        gated = gate(admitted.join(
+        gated = gate_allowed_relational(admitted.join(
             robots_cache.select("host_key", "always", "rules"),
             "host_key", "left"))
         allowed = gated.where(F.col("allowed")).select(
             "url_canon", "host_key", "match_path", "priority")
 
-        pending = frontier.unionByName(allowed).persist()
+        pending = lifecycle.track(frontier.unionByName(allowed))
 
         # 4. schedule (D3/D4/D9)
         delays = robots_cache.select("host_key", "crawl_delay")
@@ -229,9 +225,9 @@ class CrawlDriver:
         selected = politeness_schedule(with_delay, cfg.round_seconds,
                                        cfg.default_delay, cfg.salt_buckets,
                                        skew_threshold=cfg.skew_threshold)
-        schedule_rows = sequence_schedule(selected).select(
+        schedule_rows = lifecycle.track(sequence_schedule(selected).select(
             F.lit(round_no).alias("round"), F.col("seq"),
-            "url_canon", "host_key", "priority").cache()
+            "url_canon", "host_key", "priority"))
 
         # 5. fetch + verify (D7)
         fetch_log = fetch_and_verify(
@@ -350,12 +346,8 @@ class CrawlDriver:
                delta=True)
         self._write_driver_state(round_no + 1, snaps, counts)
 
-        admitted.unpersist()
-        pending.unpersist()
-        robots_new.unpersist()
-        schedule_rows.unpersist()
-        # caches operators registered on the shared lifecycle this round
-        # (global_sequence's ranked partials) die with the round too
+        # the round's pinned frames and the caches operators registered on
+        # the shared lifecycle (global_sequence's ranked partials) die here
         lifecycle.release()
         return bool(n_scheduled or n_admitted or counts["candidates"])
 

@@ -1,7 +1,10 @@
 """Partitioned Bloom filter for the URL-seen fast path (D2).
 
-North-rule requirement: "bloom/cuckoo URL-seen ... hashed into a partitioned
-Bloom filter persisted as Iceberg tables".  Design:
+North-rule requirement: a Bloom or Cuckoo URL-seen set "hashed into a
+partitioned Bloom filter persisted as Iceberg tables".  Bloom alone meets
+it: a Cuckoo filter's edge over Bloom is deletion (Learned Cuckoo Filter,
+SIGMOD 2023), and ``url_seen`` never deletes, so the Cuckoo variant was
+dropped.  Design:
 
 * The seen-set is hashed into P independent Bloom shards; a URL's shard is
   ``hash64(url) % P``.  Shards are built in parallel with one
@@ -51,11 +54,6 @@ def _hash2(h1: np.ndarray) -> np.ndarray:
 
 def shard_of(urls: pd.Series, shards: int) -> np.ndarray:
     return (_hash1(urls) % np.uint64(shards)).astype(np.int32)
-
-
-@F.pandas_udf(T.IntegerType())
-def _shard_udf_16(urls: pd.Series) -> pd.Series:  # pragma: no cover (bound below)
-    return pd.Series(shard_of(urls, 16))
 
 
 def make_shard_udf(shards: int):

@@ -33,7 +33,7 @@ Known deviations (documented, none affect our test corpus):
   the *translated regex source* bytes rather than the compiled-program
   size (Python exposes no compiled-size metric); either way a pathological
   ``*``+``$`` pattern large enough to trip Rust's cap is dropped, and an
-  adversarial robots.txt cannot plant an unbounded regex in the match UDF.
+  adversarial robots.txt cannot plant an unbounded regex in the gate.
 * ``$`` in the combined wildcard regex is translated to ``\\Z`` because
   Python's ``$`` also matches before a trailing newline while Rust's does not.
 """

@@ -1,5 +1,4 @@
-"""Structured Streaming curation pipeline (SURVEY.md §8e; the corpus
-analog of runner.run_streaming_rounds).
+"""Structured Streaming curation pipeline (SURVEY.md §8e).
 
 Documents arrive as a stream; every micro-batch runs the curation
 stages incrementally against persisted dedup state, so a corpus can be
@@ -255,6 +254,47 @@ def _curate_batch_inner(batch: DataFrame, epoch_id: int, store,
     store.append(COMMIT_TABLE, metrics, meta=commit_meta)
 
 
+def _checkpoint_run_id(checkpoint_dir: str) -> str:
+    """The run identity pinned inside ``checkpoint_dir``, created on first use.
+
+    It lives and dies with Spark's batch-id sequence, so a lost/re-pointed
+    checkpoint (whose ids restart at 0) presents a NEW identity and the
+    exactly-once skip can fail fast instead of silently dropping batches
+    (see _curate_batch).  The id is written to a private temp file and
+    hard-linked into place, which fails if the name exists: concurrent
+    first runs all read the one winner's id, and a crash never leaves a
+    half-written id behind.
+    """
+    import uuid
+
+    os.makedirs(checkpoint_dir, exist_ok=True)
+    ident = os.path.join(checkpoint_dir, "kit_run_id")
+    tmp = f"{ident}.{uuid.uuid4().hex}.tmp"
+    with open(tmp, "w") as fh:
+        fh.write(uuid.uuid4().hex)
+        fh.flush()
+        os.fsync(fh.fileno())
+    try:
+        os.link(tmp, ident)
+    except FileExistsError:
+        pass  # another run created it first: its id wins
+    finally:
+        os.unlink(tmp)
+    try:
+        with open(ident) as fh:
+            run_id = fh.read().strip()
+    except (OSError, UnicodeDecodeError) as exc:
+        raise RuntimeError(
+            f"unreadable run identity {ident!r} in the streaming "
+            f"checkpoint: {exc}") from exc
+    if not run_id:
+        raise RuntimeError(
+            f"empty run identity {ident!r} in the streaming checkpoint; "
+            "the checkpoint cannot be matched to its committed state — "
+            "restore the id or start from a fresh checkpoint directory")
+    return run_id
+
+
 def run_streaming_curation(doc_stream: DataFrame, store,
                            checkpoint_dir: str,
                            benchmark: DataFrame | None = None,
@@ -267,22 +307,7 @@ def run_streaming_curation(doc_stream: DataFrame, store,
     chains, or leave the default trigger for a live stream.
     """
     cfg = cfg or CurationStreamConfig()
-    # pin a run identity inside the checkpoint dir: it lives and dies
-    # with Spark's batch-id sequence, so a lost/re-pointed checkpoint
-    # (whose ids restart at 0) presents a NEW identity and the
-    # exactly-once skip can fail fast instead of silently dropping
-    # batches (see _curate_batch)
-    import uuid
-
-    os.makedirs(checkpoint_dir, exist_ok=True)
-    ident = os.path.join(checkpoint_dir, "kit_run_id")
-    if os.path.exists(ident):
-        with open(ident) as fh:
-            run_id = fh.read().strip()
-    else:
-        run_id = uuid.uuid4().hex
-        with open(ident, "w") as fh:
-            fh.write(run_id)
+    run_id = _checkpoint_run_id(checkpoint_dir)
 
     def process(batch_df: DataFrame, epoch_id: int) -> None:
         _curate_batch(batch_df, epoch_id, store, benchmark, cfg,

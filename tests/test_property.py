@@ -98,3 +98,44 @@ def test_idn_canonicalize_total_idempotent_ascii(host, path):
         assert parse_url_str(canon) == canon
         authority = canon.split("://", 1)[1].split("/", 1)[0]
         assert authority.isascii(), canon
+
+
+# hostile URL text: spaces, quotes, angle brackets, backslashes,
+# non-ASCII paths and IDN hosts (the chars the path normalizer encodes);
+# half the paths are otherwise-clean ASCII with ONE hostile char, so the
+# canonicalizer's regex fast path sees them too
+hostile_chars = " \"<>\\`{|}^[]%\tüé日本"
+safe_path = st.text(alphabet=string.ascii_letters + string.digits +
+                    "/._-~!$&'()*+,;=:@", max_size=20)
+hostile_urls = st.builds(
+    lambda scheme, host, sep, path: f"{scheme}{host}{sep}{path}",
+    st.sampled_from(["http://", "https://", "HTTPS://", "http:\\\\",
+                     " https://", "ftp://", ""]),
+    st.one_of(idn_host_chars,
+              st.from_regex(r"[a-z0-9]{1,8}(\.[a-z]{2,4})?", fullmatch=True)),
+    st.sampled_from(["/", "/", "/", ":8080/", "?", "#", "", " "]),
+    st.one_of(
+        st.text(alphabet=string.printable + hostile_chars, max_size=40),
+        st.builds(lambda a, c, b: a + c + b, safe_path,
+                  st.sampled_from(hostile_chars), safe_path)))
+
+
+@given(st.lists(hostile_urls, min_size=1, max_size=16))
+@settings(max_examples=300, deadline=None)
+def test_canonical_match_path_needs_no_gate_normalization(raws):
+    """The robots gate matches canonical paths as-is (no re-normalization),
+    so every match_path the canonicalizer emits must be a fixed point of
+    normalize_path, and must equal the path the crawl re-derives JVM-side
+    from url_canon (derive_host_and_path strips ``^[a-z]+://[^/]*``)."""
+    import re
+
+    import pandas as pd
+
+    from kit_spark.functions.canon import canonicalize_batch
+
+    out = canonicalize_batch(pd.Series(raws, dtype=object))
+    for raw, canon, path in zip(raws, out["url_canon"], out["match_path"]):
+        if not isinstance(canon, str):
+            continue
+        assert normalize_path(path) == path, (raw, path)
+        assert re.sub(r"^[a-z]+://[^/]*", "", canon) == path, (raw, canon)

@@ -7,7 +7,7 @@ from pyspark.sql import Row, functions as F
 
 from kit_spark.functions.bloom import build_bloom, might_contain
 from kit_spark.functions.canon import canonicalize_batch, with_canon
-from kit_spark.functions.robots_udfs import gate_allowed, make_compile_udf
+from kit_spark.functions.robots_udfs import make_compile_udf
 from kit_spark.functions.sitemap_udfs import parse_sitemap_docs
 from kit_spark.kit_py.robots import Robots
 from kit_spark.kit_py.urls import parse_url_str, url_host_key
@@ -78,21 +78,6 @@ def test_compile_udf_matches_kernel(robots_cache_df):
         got_rules = [(r["pattern"], r["allow"], r["kind"]) for r in got["rules"]]
         exp_rules = [(r.pattern, r.allow, r.kind) for r in expected.rules]
         assert got_rules == exp_rules
-
-
-def test_gate_matches_kernel(spark, robots_cache_df):
-    paths = ["/private/x", "/private/open.html", "/ok", "/a.tmp", "/axxy",
-             "/robots.txt", "/x y"]
-    cand = spark.createDataFrame(
-        [(h, p) for h, _, _ in ROBOTS_DOCS for p in paths],
-        "host_key string, match_path string")
-    gated = gate_allowed(cand.join(
-        robots_cache_df.select("host_key", "always", "rules"), "host_key"))
-    got = {(r["host_key"], r["match_path"]): r["allowed"] for r in gated.collect()}
-    for host, access, body in ROBOTS_DOCS:
-        expected = Robots.from_access(access, body, "kitbot")
-        for p in paths:
-            assert got[(host, p)] == expected.is_allowed(p), (host, p)
 
 
 def test_parse_sitemap_docs(spark, fixture_web):
@@ -201,28 +186,6 @@ def test_read_robots_dir_binaryfile(spark, tmp_path):
     assert rows[0]["host_key"] == "https://ok.test:443"
     assert rows[0]["body"].startswith(b"User-agent")
     assert rows[0]["body_bytes"] == len(rows[0]["body"])
-
-
-def test_cuckoo_no_false_negatives_and_delete_capable(spark):
-    from kit_spark.functions.cuckoo import build_cuckoo, cuckoo_might_contain
-
-    seen = spark.createDataFrame(
-        [(f"https://h{i % 5}.test/c{i}",) for i in range(3000)],
-        "url_canon string")
-    table = build_cuckoo(seen, shards=4).cache()
-    rows = table.collect()
-    assert len(rows) == 4
-    assert all(r["n_failed"] == 0 for r in rows), "sizing must avoid drops"
-    cand = spark.createDataFrame(
-        [(f"https://h{i % 5}.test/c{i}",) for i in range(2000, 4000)],
-        "url_canon string")
-    probed = cuckoo_might_contain(cand, table, shards=4).cache()
-    false_neg = probed.join(seen, "url_canon").where(~F.col("might_be_seen")) \
-        .count()
-    assert false_neg == 0
-    fp = probed.join(seen, "url_canon", "left_anti") \
-        .where(F.col("might_be_seen")).count()
-    assert fp < 40  # 16-bit fingerprints, 4 slots -> fp rate ~2^-13*8
 
 
 def test_production_minhash_xxhash64_finds_planted_dups(spark):
@@ -383,6 +346,48 @@ def test_bloom_incremental_merge(spark):
     assert probed.where(~F.col("might_be_seen")).count() == 0
 
 
+def _compiled_cache(spark, robots_cache_df):
+    """Materialize the compiled robots cache (in production it is a TABLE
+    read, and the one-Python-call-per-doc compile is amortized over 10^10
+    URLs) so plan assertions isolate the gate itself."""
+    from kit_spark.functions.robots_udfs import RULE_STRUCT
+
+    cache_schema = ("host_key string, always boolean, "
+                    f"rules array<{RULE_STRUCT.simpleString()}>")
+    return spark.createDataFrame(
+        robots_cache_df.select("host_key", "always", "rules").collect(),
+        cache_schema)
+
+
+def test_gate_matches_kernel(spark, robots_cache_df):
+    """Raw URLs -> canonicalizer -> gate must agree with the kernel applied
+    to the raw path: the canonicalizer's match_path is what satisfies the
+    gate's normalized-path contract (e.g. '/x y' arrives as '/x%20y')."""
+    from kit_spark.functions.robots_udfs import gate_allowed_relational
+    from kit_spark.kit_py.robots import normalize_path
+
+    paths = ["/private/x", "/private/open.html", "/ok", "/a.tmp", "/axxy",
+             "/robots.txt", "/x y", "/a/b.tmpx"]
+    raw = spark.createDataFrame(
+        [(h.rsplit(":", 1)[0] + p, h, p) for h, _, _ in ROBOTS_DOCS
+         for p in paths],
+        "url string, doc_host string, raw_path string")
+    cand = with_canon(raw)
+    gated = gate_allowed_relational(
+        cand.join(_compiled_cache(spark, robots_cache_df), "host_key"))
+    rows = gated.collect()
+    assert len(rows) == len(ROBOTS_DOCS) * len(paths)  # every URL joined
+    got = {}
+    for r in rows:
+        assert r["host_key"] == r["doc_host"], r["url"]
+        assert normalize_path(r["match_path"]) == r["match_path"], r["url"]
+        got[(r["host_key"], r["raw_path"])] = r["allowed"]
+    for host, access, body in ROBOTS_DOCS:
+        expected = Robots.from_access(access, body, "kitbot")
+        for p in paths:
+            assert got[(host, p)] == expected.is_allowed(p), (host, p)
+
+
 def test_relational_gate_matches_kernel(spark, robots_cache_df):
     """The pure-Catalyst gate must agree with the kernel on every
     (golden-doc, path) pair — fed canonical/normalized paths, which is its
@@ -396,17 +401,9 @@ def test_relational_gate_matches_kernel(spark, robots_cache_df):
         [(h, p) for h, _, _ in ROBOTS_DOCS for p in paths],
         "host_key string, match_path string")
     from kit_spark import plans
-    from kit_spark.functions.robots_udfs import RULE_STRUCT
 
-    # materialize the compiled cache (in production it is a TABLE read, and
-    # the one-Python-call-per-doc compile is amortized over 10^10 URLs) so
-    # the plan assertion isolates the gate itself
-    cache_schema = ("host_key string, always boolean, "
-                    f"rules array<{RULE_STRUCT.simpleString()}>")
-    compiled = spark.createDataFrame(
-        robots_cache_df.select("host_key", "always", "rules").collect(),
-        cache_schema)
-    gated = gate_allowed_relational(cand.join(compiled, "host_key"))
+    gated = gate_allowed_relational(
+        cand.join(_compiled_cache(spark, robots_cache_df), "host_key"))
     assert "EvalPython" not in plans.formatted_plan(gated)  # no Python at all
     got = {(r["host_key"], r["match_path"]): r["allowed"]
            for r in gated.collect()}

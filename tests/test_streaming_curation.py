@@ -257,3 +257,39 @@ def test_checkpoint_identity_mismatch_fails_fast(spark, tmp_path, held_out):
     assert "d13" in got
     # identity-less callers (legacy/direct) keep the old epoch-only skip
     _curate_batch(d1, 0, store, held_out, CFG)
+
+
+def test_run_identity_concurrent_creators_agree(tmp_path):
+    """Runs that start together on one fresh checkpoint dir must all pin
+    the same identity — never two ids for one checkpoint."""
+    import threading
+    from concurrent.futures import ThreadPoolExecutor
+
+    from kit_spark.streaming.curation import _checkpoint_run_id
+
+    ckpt = str(tmp_path / "ckpt")
+    n = 8
+    barrier = threading.Barrier(n)
+
+    def create(_):
+        barrier.wait()
+        return _checkpoint_run_id(ckpt)
+
+    with ThreadPoolExecutor(max_workers=n) as pool:
+        ids = set(pool.map(create, range(n)))
+    assert len(ids) == 1
+    assert (tmp_path / "ckpt" / "kit_run_id").read_text() == ids.pop()
+    assert sorted(p.name for p in (tmp_path / "ckpt").iterdir()) == \
+        ["kit_run_id"]  # no temp files left behind
+
+
+def test_run_identity_empty_file_raises(tmp_path):
+    """An empty identity (a torn write) must fail fast, never be reused
+    as the run id ""."""
+    from kit_spark.streaming.curation import _checkpoint_run_id
+
+    ckpt = tmp_path / "ckpt"
+    ckpt.mkdir()
+    (ckpt / "kit_run_id").write_text("")
+    with pytest.raises(RuntimeError, match="empty run identity"):
+        _checkpoint_run_id(str(ckpt))
